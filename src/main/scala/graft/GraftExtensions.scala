@@ -2,109 +2,27 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{AnnBuckets, DotLong, IvfProbes, TokenCount}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import graft.functions.Kernels
 
-/** Session-extensions installer: makes the library's native expressions
-  * AND its optimizer rule available to ANY session (including pure-SQL
-  * users) via `--conf spark.sql.extensions=graft.GraftExtensions` — the
-  * standard deployment path for custom Catalyst surface on a cluster.
-  * The programmatic twins are `DotLong.register(spark)` /
-  * `AnnBuckets.register(spark)` / `NoCartesianGuard.install(spark)` for
-  * sessions built in code. The injected rule
-  * ([[graft.plans.NoCartesianGuard]]) is opt-in by conf and trivially
-  * result-invariant: it fails runaway cartesian plans at optimization
-  * time, it never rewrites them.
+/** Session-extensions installer: makes every native kernel in
+  * [[graft.functions.Kernels]] AND the library's optimizer rule
+  * available to ANY session (including pure-SQL users) via
+  * `--conf spark.sql.extensions=graft.GraftExtensions` or
+  * `SparkSession.builder().withExtensions(new GraftExtensions)` — the
+  * only route by which the kernels reach SQL. Library code does not need
+  * it: it builds the kernel expressions directly. The injected rule
+  * ([[graft.plans.NoCartesianGuard]], also installable on a built
+  * session with `NoCartesianGuard.install(spark)`) is opt-in by conf and
+  * trivially result-invariant: it fails runaway cartesian plans at
+  * optimization time, it never rewrites them.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(graft.plans.NoCartesianGuard(_))
-    ext.injectFunction((
-      FunctionIdentifier("dot_long"),
-      new ExpressionInfo(classOf[DotLong].getName, "dot_long"),
-      (exprs: Seq[Expression]) => DotLong(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("ann_buckets"),
-      new ExpressionInfo(classOf[AnnBuckets].getName, "ann_buckets"),
-      (exprs: Seq[Expression]) => AnnBuckets(exprs.head, exprs(1), exprs(2), exprs(3))))
-    ext.injectFunction((
-      FunctionIdentifier("ivf_probes"),
-      new ExpressionInfo(classOf[IvfProbes].getName, "ivf_probes"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 4, "ivf_probes takes (cents, q, n2, p)")
-        IvfProbes(exprs.head, exprs(1), exprs(2), exprs(3) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
-          case other => throw new IllegalArgumentException(
-            s"ivf_probes probe count must be an integer literal, got $other")
-        })
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("token_count"),
-      new ExpressionInfo(classOf[TokenCount].getName, "token_count"),
-      (exprs: Seq[Expression]) => TokenCount(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("quantize_long"),
-      new ExpressionInfo(classOf[graft.functions.QuantizeLong].getName, "quantize_long"),
-      (exprs: Seq[Expression]) => graft.functions.QuantizeLong(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("int8_codes"),
-      new ExpressionInfo(classOf[graft.functions.Int8Codes].getName, "int8_codes"),
-      (exprs: Seq[Expression]) => graft.functions.Int8Codes(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("hash60"),
-      new ExpressionInfo(classOf[graft.functions.Hash60].getName, "hash60"),
-      (exprs: Seq[Expression]) => graft.functions.Hash60(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("hash60b"),
-      new ExpressionInfo(classOf[graft.functions.Hash60B].getName, "hash60b"),
-      (exprs: Seq[Expression]) => graft.functions.Hash60B(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("hash120"),
-      new ExpressionInfo(classOf[graft.functions.Hash120].getName, "hash120"),
-      (exprs: Seq[Expression]) => graft.functions.Hash120(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("ngram_hash60"),
-      new ExpressionInfo(classOf[graft.functions.NgramHash60].getName, "ngram_hash60"),
-      (exprs: Seq[Expression]) => graft.functions.NgramHash60(exprs.head, intLit(exprs(1), "ngram_hash60 k"))))
-    ext.injectFunction((
-      FunctionIdentifier("skipgram_pairs"),
-      new ExpressionInfo(classOf[graft.functions.SkipgramPairs].getName, "skipgram_pairs"),
-      (exprs: Seq[Expression]) => graft.functions.SkipgramPairs(exprs.head, intLit(exprs(1), "skipgram_pairs w"))))
-    ext.injectFunction((
-      FunctionIdentifier("tokens_ws"),
-      new ExpressionInfo(classOf[graft.functions.TokensWs].getName, "tokens_ws"),
-      (exprs: Seq[Expression]) => graft.functions.TokensWs(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("term_freqs"),
-      new ExpressionInfo(classOf[graft.functions.TermFreqs].getName, "term_freqs"),
-      (exprs: Seq[Expression]) => graft.functions.TermFreqs(exprs.head, strArrayLit(exprs(1), "term_freqs terms"))))
-    ext.injectFunction((
-      FunctionIdentifier("count_in"),
-      new ExpressionInfo(classOf[graft.functions.CountIn].getName, "count_in"),
-      (exprs: Seq[Expression]) => graft.functions.CountIn(exprs.head, strArrayLit(exprs(1), "count_in words"))))
-    ext.injectFunction((
-      FunctionIdentifier("filter_in"),
-      new ExpressionInfo(classOf[graft.functions.FilterIn].getName, "filter_in"),
-      (exprs: Seq[Expression]) => graft.functions.FilterIn(exprs.head, strArrayLit(exprs(1), "filter_in words"))))
-  }
-
-  private def strArrayLit(e: Expression, what: String): Seq[String] = {
-    import org.apache.spark.sql.types.{ArrayType, StringType}
-    e match {
-      case f if f.resolved && f.foldable &&
-          f.dataType.isInstanceOf[ArrayType] &&
-          f.dataType.asInstanceOf[ArrayType].elementType == StringType =>
-        f.eval(null).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-          .toArray[org.apache.spark.unsafe.types.UTF8String](StringType).map(_.toString).toSeq
-      case other => throw new IllegalArgumentException(
-        s"$what must be a literal ARRAY<STRING>, got $other")
+    Kernels.table.foreach { k =>
+      ext.injectFunction((FunctionIdentifier(k.name),
+        new ExpressionInfo(k.exprClass.getName, k.name), k.build))
     }
-  }
-
-  private def intLit(e: Expression, what: String): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
-    case other => throw new IllegalArgumentException(s"$what must be an integer literal, got $other")
   }
 }

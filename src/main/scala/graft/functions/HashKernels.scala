@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -35,18 +33,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * 1, 15)) AS BIGINT)` form — same value, independently computed.
   */
 object HashKernels {
-
-  private[functions] def checkString(e: Expression, fn: String): TypeCheckResult =
-    if (e.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$fn requires a STRING argument, got ${e.dataType.sql}")
-
-  private[functions] def checkStringArray(e: Expression, fn: String): TypeCheckResult =
-    e.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$fn requires ARRAY<STRING>, got ${other.sql}")
-    }
 
   private val localMd = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
@@ -105,44 +91,12 @@ object HashKernels {
     s"(((($d[7] & 0xffL) << 56) | (($d[8] & 0xffL) << 48) | (($d[9] & 0xffL) << 40) | " +
       s"(($d[10] & 0xffL) << 32) | (($d[11] & 0xffL) << 24) | (($d[12] & 0xffL) << 16) | " +
       s"(($d[13] & 0xffL) << 8) | ($d[14] & 0xffL)) & ((1L << 60) - 1))"
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier("hash60"))) {
-      reg.registerFunction(
-        FunctionIdentifier("hash60"),
-        new ExpressionInfo(classOf[Hash60].getName, "hash60"),
-        (exprs: Seq[Expression]) => Hash60(exprs.head))
-      reg.registerFunction(
-        FunctionIdentifier("hash60b"),
-        new ExpressionInfo(classOf[Hash60B].getName, "hash60b"),
-        (exprs: Seq[Expression]) => Hash60B(exprs.head))
-      reg.registerFunction(
-        FunctionIdentifier("hash120"),
-        new ExpressionInfo(classOf[Hash120].getName, "hash120"),
-        (exprs: Seq[Expression]) => Hash120(exprs.head))
-      reg.registerFunction(
-        FunctionIdentifier("ngram_hash60"),
-        new ExpressionInfo(classOf[NgramHash60].getName, "ngram_hash60"),
-        (exprs: Seq[Expression]) => NgramHash60(exprs.head, intLit(exprs(1), "ngram_hash60 k")))
-      reg.registerFunction(
-        FunctionIdentifier("skipgram_pairs"),
-        new ExpressionInfo(classOf[SkipgramPairs].getName, "skipgram_pairs"),
-        (exprs: Seq[Expression]) => SkipgramPairs(exprs.head, intLit(exprs(1), "skipgram_pairs w")))
-    }
-  }
-
-  private def intLit(e: Expression, what: String): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
-    case other => throw new IllegalArgumentException(s"$what must be an integer literal, got $other")
-  }
 }
 
 /** `hash60(s)` == `CAST(conv(substring(md5(s), 1, 15), 16, 10) AS BIGINT)`. */
 case class Hash60(child: Expression) extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult =
-    HashKernels.checkString(child, "hash60")
+    Kernels.checkString(child, "hash60")
   override def dataType: DataType = LongType
   override def prettyName: String = "hash60"
 
@@ -169,7 +123,7 @@ case class Hash60(child: Expression) extends UnaryExpression {
 /** `hash60b(s)` == `CAST(conv(substring(md5(s), 16, 15), 16, 10) AS BIGINT)`. */
 case class Hash60B(child: Expression) extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult =
-    HashKernels.checkString(child, "hash60b")
+    Kernels.checkString(child, "hash60b")
   override def dataType: DataType = LongType
   override def prettyName: String = "hash60b"
 
@@ -199,7 +153,7 @@ case class Hash60B(child: Expression) extends UnaryExpression {
   * share the md5 hex between the two conv chains. */
 case class Hash120(child: Expression) extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult =
-    HashKernels.checkString(child, "hash120")
+    Kernels.checkString(child, "hash120")
   override def dataType: DataType = StructType(Seq(
     StructField("h1", LongType, nullable = false),
     StructField("h2", LongType, nullable = false)))
@@ -244,7 +198,7 @@ case class NgramHash60(child: Expression, k: Int) extends UnaryExpression {
   require(k >= 1, s"ngram_hash60 window must be >= 1, got $k")
 
   override def checkInputDataTypes(): TypeCheckResult =
-    HashKernels.checkStringArray(child, "ngram_hash60")
+    Kernels.checkStringArray(child, "ngram_hash60")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "ngram_hash60"
 
@@ -330,7 +284,7 @@ case class SkipgramPairs(child: Expression, w: Int) extends UnaryExpression {
   require(w >= 1, s"skipgram_pairs window must be >= 1, got $w")
 
   override def checkInputDataTypes(): TypeCheckResult =
-    HashKernels.checkStringArray(child, "skipgram_pairs")
+    Kernels.checkStringArray(child, "skipgram_pairs")
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("center", StringType, nullable = true),
     StructField("context", StringType, nullable = true))), containsNull = false)

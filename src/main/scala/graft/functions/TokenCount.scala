@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
+import org.apache.spark.sql.types.{DataType, IntegerType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Whitespace-token count of a string column as a native Catalyst
@@ -28,9 +26,7 @@ import org.apache.spark.unsafe.types.UTF8String
 case class TokenCount(child: Expression) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"token_count requires a STRING argument, got ${child.dataType.sql}")
+    Kernels.checkString(child, "token_count")
 
   override def dataType: DataType = IntegerType
   override def prettyName: String = "token_count"
@@ -72,15 +68,4 @@ case class TokenCount(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): TokenCount =
     copy(child = newChild)
-}
-
-object TokenCount {
-  /** Register `token_count` in the session's function registry.
-    * Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("token_count"),
-      new ExpressionInfo(classOf[TokenCount].getName, "token_count"),
-      (exprs: Seq[Expression]) => TokenCount(exprs.head))
-  }
 }

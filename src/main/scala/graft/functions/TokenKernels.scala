@@ -1,15 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native tokenization kernels.
+/* Native tokenization kernels.
   *
   * The library's canonical tokenizer ([[TextOps.tokens]]) was
   * `filter(split(text, " "), t -> t <> "")`: the split is codegen'd but
@@ -28,55 +26,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * materializing the runs instead of counting them. Token bytes are
   * copied out (never aliased into the row's transient buffer).
   */
-object TokenKernels {
-
-  private[functions] def checkString(e: Expression, fn: String): TypeCheckResult =
-    if (e.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$fn requires a STRING argument, got ${e.dataType.sql}")
-
-  private[functions] def checkStringArray(e: Expression, fn: String): TypeCheckResult =
-    e.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$fn requires ARRAY<STRING>, got ${other.sql}")
-    }
-
-  /** Extract the literal string array of a `terms` argument (a
-    * Literal after constant folding, a CreateArray of literals before
-    * it — any resolved foldable ARRAY<STRING> works). */
-  private def termsLit(e: Expression, what: String): Seq[String] = e match {
-    case f if f.resolved && f.foldable &&
-        f.dataType.isInstanceOf[ArrayType] &&
-        f.dataType.asInstanceOf[ArrayType].elementType == StringType =>
-      f.eval(null).asInstanceOf[ArrayData]
-        .toArray[UTF8String](StringType).map(_.toString).toSeq
-    case other => throw new IllegalArgumentException(
-      s"$what must be a literal ARRAY<STRING>, got $other")
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier("tokens_ws"))) {
-      reg.registerFunction(
-        FunctionIdentifier("tokens_ws"),
-        new ExpressionInfo(classOf[TokensWs].getName, "tokens_ws"),
-        (exprs: Seq[Expression]) => TokensWs(exprs.head))
-      reg.registerFunction(
-        FunctionIdentifier("term_freqs"),
-        new ExpressionInfo(classOf[TermFreqs].getName, "term_freqs"),
-        (exprs: Seq[Expression]) => TermFreqs(exprs.head, termsLit(exprs(1), "term_freqs terms")))
-      reg.registerFunction(
-        FunctionIdentifier("count_in"),
-        new ExpressionInfo(classOf[CountIn].getName, "count_in"),
-        (exprs: Seq[Expression]) => CountIn(exprs.head, termsLit(exprs(1), "count_in words")))
-      reg.registerFunction(
-        FunctionIdentifier("filter_in"),
-        new ExpressionInfo(classOf[FilterIn].getName, "filter_in"),
-        (exprs: Seq[Expression]) => FilterIn(exprs.head, termsLit(exprs(1), "filter_in words")))
-    }
-  }
-}
 
 /** `tokens_ws(text)` == `filter(split(text, ' '), t -> t <> '')` as one
   * primitive byte scan — no regex, no empty-token intermediates, no
@@ -84,7 +33,7 @@ object TokenKernels {
 case class TokensWs(child: Expression) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult =
-    TokenKernels.checkString(child, "tokens_ws")
+    Kernels.checkString(child, "tokens_ws")
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "tokens_ws"
 
@@ -196,7 +145,7 @@ abstract class TermListKernel extends UnaryExpression {
 case class TermFreqs(child: Expression, terms: Seq[String]) extends TermListKernel {
 
   override def checkInputDataTypes(): TypeCheckResult =
-    TokenKernels.checkStringArray(child, "term_freqs")
+    Kernels.checkStringArray(child, "term_freqs")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "term_freqs"
 
@@ -257,7 +206,7 @@ case class TermFreqs(child: Expression, terms: Seq[String]) extends TermListKern
 case class CountIn(child: Expression, terms: Seq[String]) extends TermListKernel {
 
   override def checkInputDataTypes(): TypeCheckResult =
-    TokenKernels.checkStringArray(child, "count_in")
+    Kernels.checkStringArray(child, "count_in")
   override def dataType: DataType = IntegerType
   override def prettyName: String = "count_in"
 
@@ -318,7 +267,7 @@ case class CountIn(child: Expression, terms: Seq[String]) extends TermListKernel
 case class FilterIn(child: Expression, terms: Seq[String]) extends TermListKernel {
 
   override def checkInputDataTypes(): TypeCheckResult =
-    TokenKernels.checkStringArray(child, "filter_in")
+    Kernels.checkStringArray(child, "filter_in")
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "filter_in"
 

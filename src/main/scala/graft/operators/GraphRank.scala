@@ -98,22 +98,20 @@ object GraphRank {
       pagerankBuild(spark, sfDir)
     }.orderBy(col("node").asc)
 
-  /** Bounded collect behind the graph family's driver-side iterations
-    * (r16 verdict item 3: the collects assumed a ~100-item vocabulary
-    * FOREVER — true of every fixture, but an assumption about the
-    * data, not an enforced invariant). `limit(cap+1).collect()` bounds
-    * what can ever reach the driver (CollectLimit stops producing past
-    * the cap — the full frame is never gathered), and a `None` tells
-    * the caller to run its retained distributed iteration instead.
+  /** Bounded collect behind the graph family's driver-side iterations,
+    * which would otherwise assume a ~100-item vocabulary (true of every
+    * fixture, but an assumption about the data, not an enforced
+    * invariant). One `count()` probe compares the frame against the
+    * cap: at or under it the frame is collected, above it nothing is
+    * gathered and a `None` tells the caller to run its retained
+    * distributed iteration instead.
     * Cap = `spark.graft.graph.collectCap` (default 1M slim edge rows
     * ≈ tens of MB of driver tuples); a pure plan-shape knob — both
     * paths are bit-exact by construction, so results are invariant to
     * it (GraphRankSpec pins driver ≡ distributed on synthetic graphs
-    * by forcing cap 0). The probe is ONE `count()` job (the frames
-    * here are memoized checkpoints or their cheap projections — a
-    * CollectLimit probe was measured paying up to 4 scale-up jobs),
-    * and the collect itself only fires once the count proved it
-    * bounded. */
+    * by forcing cap 0). The probe is ONE job (the frames here are
+    * memoized checkpoints or their cheap projections — a CollectLimit
+    * probe was measured paying up to 4 scale-up jobs). */
   private def collectEdgesBounded(df: DataFrame): Option[Array[org.apache.spark.sql.Row]] = {
     val cap = graft.GraftConf.graphCollectCap(df.sparkSession)
     if (df.count() > cap) None else Some(df.collect())

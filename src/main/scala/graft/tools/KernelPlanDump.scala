@@ -1,8 +1,9 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.ExpressionColumns.{toColumn, toExpr}
 import org.apache.spark.sql.functions._
-import graft.functions.TextOps
+import graft.functions.{SkipgramPairs, TextOps}
 
 /** Dump the BUILD-pipeline plans behind the memoized hash/skipgram
   * surfaces — `PlanDump` on those registrations shows only the
@@ -30,7 +31,6 @@ object KernelPlanDump {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    graft.functions.HashKernels.register(spark)
 
     val docs = graft.sources.Tables.documents(spark, sfDir)
     val t = col("t")
@@ -72,7 +72,7 @@ object KernelPlanDump {
       .groupBy(col("p.center").as("center"), col("p.context").as("context"))
       .agg(count(lit(1)).as("cnt"))
     val skipAfter = docs.where(col("text").isNotNull)
-      .select(explode(call_function("skipgram_pairs", toks, lit(W))).as("p"))
+      .select(explode(toColumn(SkipgramPairs(toExpr(toks), W))).as("p"))
       .groupBy(col("p.center").as("center"), col("p.context").as("context"))
       .agg(count(lit(1)).as("cnt"))
 

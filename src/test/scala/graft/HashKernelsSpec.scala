@@ -1,36 +1,19 @@
 package graft
 
-import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.ExpressionColumns.{toColumn, toExpr}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.functions.TextOps
+import graft.functions.{Hash120, Hash60, Hash60B, NgramHash60, SkipgramPairs}
 
 /** The r17 native hash kernels must be VALUE-IDENTICAL to the
   * composed-builtin forms they replaced — on the fixture documents and
   * on adversarial edge rows (null text, empty string, single space,
   * multi-byte UTF-8, long repeated text, strings shorter than the
-  * window). The builtin chains are re-stated here verbatim as the
-  * reference implementations (TextOps now routes through the kernels,
-  * so the reference must not call TextOps). */
+  * window). The builtin chains are restated in [[KernelRefs]]; the
+  * kernels are built straight from their constructors. */
 class HashKernelsSpec extends SparkSpec {
-
-  private def refHash60(s: Column): Column =
-    conv(substring(md5(s), 1, 15), 16, 10).cast("long")
-  private def refHash60b(s: Column): Column =
-    conv(substring(md5(s), 16, 15), 16, 10).cast("long")
-  private def refTokens(text: Column): Column =
-    filter(split(text, " "), t => t =!= lit(""))
-  private def refNgramHash(t: Column, k: Int): Column =
-    transform(
-      when(size(t) >= k, sequence(lit(0), size(t) - k))
-        .otherwise(array().cast("array<int>")),
-      i => refHash60(concat_ws(" ", (0 until k).map(j => element_at(t, i + j + 1)): _*)))
-  private def refSkipgram(toks: Column, w: Int): Column =
-    when(size(toks) >= 2,
-      flatten(transform(sequence(lit(1), size(toks)), i =>
-        transform(slice(toks, i + 1, lit(w)), x =>
-          struct(element_at(toks, i).as("center"), x.as("context"))))))
-      .otherwise(array().cast("array<struct<center:string,context:string>>"))
+  import KernelRefs.{hash60 => refHash60, hash60b => refHash60b, tokens => refTokens}
 
   private def edgeDf = {
     val schema = StructType(Seq(
@@ -53,12 +36,11 @@ class HashKernelsSpec extends SparkSpec {
     graft.sources.Tables.documents(spark, sf).select(col("doc_id").as("id"), col("text"))
 
   test("hash60/hash60b/hash120 match the conv(md5) chains on fixture + edges") {
-    graft.functions.HashKernels.register(spark)
     for (df <- Seq(fixtureDocs, edgeDf)) {
-      val h120 = call_function("hash120", col("text"))
+      val h120 = toColumn(Hash120(toExpr(col("text"))))
       val cmp = df.select(
-          call_function("hash60", col("text")).as("k1"),
-          call_function("hash60b", col("text")).as("k2"),
+          toColumn(Hash60(toExpr(col("text")))).as("k1"),
+          toColumn(Hash60B(toExpr(col("text")))).as("k2"),
           h120.getField("h1").as("p1"), h120.getField("h2").as("p2"),
           refHash60(col("text")).as("r1"), refHash60b(col("text")).as("r2"))
         .where(!(col("k1") <=> col("r1")) || !(col("k2") <=> col("r2")) ||
@@ -76,45 +58,41 @@ class HashKernelsSpec extends SparkSpec {
   // pins the null behavior.
 
   test("ngram_hash60 matches the explode/concat_ws/hash chain for k=3 and k=20") {
-    graft.functions.HashKernels.register(spark)
     for (df <- Seq(fixtureDocs, edgeDf); k <- Seq(3, 20)) {
       val t = refTokens(col("text"))
       val empty = array().cast("array<bigint>")
       val cmp = df.select(
-          coalesce(call_function("ngram_hash60", t, lit(k)), empty).as("kn"),
-          coalesce(refNgramHash(t, k), empty).as("rn"))
+          coalesce(toColumn(NgramHash60(toExpr(t), k)), empty).as("kn"),
+          coalesce(KernelRefs.ngramHash60(t, k), empty).as("rn"))
         .where(!(col("kn") <=> col("rn")))
       assert(cmp.count() === 0)
     }
   }
 
   test("skipgram_pairs kernel matches the flatten/transform/slice HOF form") {
-    graft.functions.HashKernels.register(spark)
     val empty = array().cast("array<struct<center:string,context:string>>")
     for (df <- Seq(fixtureDocs, edgeDf); w <- Seq(1, 3)) {
       val t = refTokens(col("text"))
       val cmp = df.select(
-          coalesce(call_function("skipgram_pairs", t, lit(w)), empty).as("kp"),
-          coalesce(refSkipgram(t, w), empty).as("rp"))
+          coalesce(toColumn(SkipgramPairs(toExpr(t), w)), empty).as("kp"),
+          coalesce(KernelRefs.skipgramPairs(t, w), empty).as("rp"))
         .where(!(col("kp") <=> col("rp")))
       assert(cmp.count() === 0)
     }
   }
 
   test("null token array: kernels yield null (explode/array_min equivalent to empty)") {
-    graft.functions.HashKernels.register(spark)
     val df = edgeDf.where(col("text").isNull)
       .select(refTokens(col("text")).as("t"))
-    assert(df.select(call_function("ngram_hash60", col("t"), lit(3)))
-      .collect().forall(_.isNullAt(0)))
-    assert(df.select(call_function("skipgram_pairs", col("t"), lit(3)))
+    val ngrams = toColumn(NgramHash60(toExpr(col("t")), 3))
+    assert(df.select(ngrams).collect().forall(_.isNullAt(0)))
+    assert(df.select(toColumn(SkipgramPairs(toExpr(col("t")), 3)))
       .collect().forall(_.isNullAt(0)))
     // and explode of either null form produces zero rows
-    assert(df.select(explode(call_function("ngram_hash60", col("t"), lit(3)))).count() === 0)
+    assert(df.select(explode(ngrams)).count() === 0)
   }
 
   test("interpreted eval paths agree with codegen (filter forces eval)") {
-    graft.functions.HashKernels.register(spark)
     // a non-deterministic-free projection evaluated via Dataset.collect
     // exercises codegen; InterpretedUnsafeProjection is exercised by
     // constructing the expressions directly
@@ -122,8 +100,8 @@ class HashKernelsSpec extends SparkSpec {
     import org.apache.spark.unsafe.types.UTF8String
     val lit3 = org.apache.spark.sql.catalyst.expressions.Literal(
       UTF8String.fromString("alpha beta gamma delta"), StringType)
-    val h = graft.functions.Hash60(lit3).eval(InternalRow.empty)
-    val hb = graft.functions.Hash60B(lit3).eval(InternalRow.empty)
+    val h = Hash60(lit3).eval(InternalRow.empty)
+    val hb = Hash60B(lit3).eval(InternalRow.empty)
     val viaDf = spark.sql(
       "SELECT CAST(conv(substring(md5('alpha beta gamma delta'), 1, 15), 16, 10) AS BIGINT) a, " +
       "CAST(conv(substring(md5('alpha beta gamma delta'), 16, 15), 16, 10) AS BIGINT) b").collect()(0)

@@ -1,8 +1,10 @@
 package graft
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.ExpressionColumns.{toColumn, toExpr}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.functions.{Int8Codes, QuantizeLong}
 
 /** The r16 native quantization kernels must be VALUE-IDENTICAL to the
   * interpreted higher-order forms they replaced — on the fixture
@@ -34,7 +36,6 @@ class QuantizeKernelsSpec extends SparkSpec {
   }
 
   test("quantize_long matches the transform/round HOF form on fixture + edges") {
-    graft.functions.QuantizeKernels.register(spark)
     val hof = (c: org.apache.spark.sql.Column) =>
       transform(c, x => round(x.cast("double") * 1000000.0).cast("long"))
     // fixture embeddings (float elements)
@@ -42,7 +43,7 @@ class QuantizeKernelsSpec extends SparkSpec {
       .select(col("vec_id"), col("embedding").as("e"))
     for (df <- Seq(emb, edgeDf)) {
       val cmp = df.select(col("vec_id"),
-          call_function("quantize_long", col("e")).as("k"),
+          toColumn(QuantizeLong(toExpr(col("e")))).as("k"),
           hof(col("e")).as("h"))
         .where(!(col("k") <=> col("h")))
       assert(cmp.count() === 0)
@@ -50,7 +51,6 @@ class QuantizeKernelsSpec extends SparkSpec {
   }
 
   test("int8_codes matches the maxabs/round HOF form on fixture + edges") {
-    graft.functions.QuantizeKernels.register(spark)
     def hofCodes(df: org.apache.spark.sql.DataFrame) = df
       .select(col("vec_id"), col("e"),
         array_max(transform(col("e"), x => abs(x))).as("maxabs"))
@@ -62,7 +62,7 @@ class QuantizeKernelsSpec extends SparkSpec {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     for (df <- Seq(emb, edgeDf)) {
       val k = df.select(col("vec_id"),
-        call_function("int8_codes", col("e")).as("k"))
+        toColumn(Int8Codes(toExpr(col("e")))).as("k"))
       val cmp = hofCodes(df).join(k, "vec_id")
         .where(!(col("k") <=> col("h")))
       assert(cmp.count() === 0)

@@ -54,11 +54,10 @@ class ScaleOpsSpec extends SparkSpec {
   }
 
   test("dot_long is SQL-callable once registered (extensions wiring)") {
-    // the extensions class and DotLong.register share the same builder;
-    // a fresh session can't be created in this JVM (getOrCreate returns
-    // the shared test session), so exercise the registry path directly
-    graft.functions.DotLong.register(spark)
-    val r = spark.sql("SELECT dot_long(array(1L, 2L, 3L), array(4L, 5L, 6L)) AS d").collect()
+    // the SQL surface comes from the extensions alone: a session built
+    // with GraftExtensions on the shared SparkContext
+    val r = TestSpark.sqlSpark
+      .sql("SELECT dot_long(array(1L, 2L, 3L), array(4L, 5L, 6L)) AS d").collect()
     assert(r(0).getLong(0) == 32L)
   }
 
@@ -74,7 +73,6 @@ class ScaleOpsSpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.types.{ArrayType, LongType}
     import graft.operators.Similarity
-    graft.functions.AnnBuckets.register(spark)
     val planes = 5
     val vec = (0 until Similarity.Dims).map(i => (i * 37 % 101) - 50L)
     val flat = (0 until Similarity.AnnTables).flatMap(t =>
@@ -96,7 +94,7 @@ class ScaleOpsSpec extends SparkSpec {
     val got = e.eval(null).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toLongArray()
     assert(got.toSeq == expect)
     // SQL / codegen path over a one-row frame
-    val sqlGot = spark.sql(
+    val sqlGot = TestSpark.sqlSpark.sql(
       s"""SELECT ann_buckets(array(${vec.map(_ + "L").mkString(",")}),
          |                   array(${flat.map(_ + "L").mkString(",")}),
          |                   $planes, ${Similarity.AnnTables}) AS b""".stripMargin)
@@ -136,7 +134,6 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("ANN candidate pairs stay ~linear in corpus size (bucket count scales)") {
     import graft.operators.Similarity
-    graft.functions.DotLong.register(spark) // don't depend on suite order
     // 10k deterministic pseudo-random vectors, already in quantized
     // space. With a FIXED 16-bucket space this corpus would generate
     // ~n²/32 ≈ 3.1M candidate pairs; the scaled bucketing must stay
@@ -165,7 +162,6 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("spark.graft.ann.planes overrides the derived plane count") {
     import graft.operators.Similarity
-    graft.functions.DotLong.register(spark)
     try {
       spark.conf.set(GraftConf.AnnPlanesKey, "4")
       // with 4 forced planes the query must still run and stay a

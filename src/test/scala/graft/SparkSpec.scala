@@ -17,6 +17,12 @@ object TestSpark {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+  /** A second session on the same SparkContext, built the way pure-SQL
+    * users get the native kernels: through the library's extensions. */
+  lazy val sqlSpark: SparkSession = {
+    spark // create() reuses the running SparkContext; it must exist first
+    SparkSession.builder().withExtensions(new GraftExtensions).create()
+  }
   val sf: String = "/root/testdata/sf0.001"
 }
 

@@ -1,19 +1,19 @@
 package graft
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.ExpressionColumns.{toColumn, toExpr}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.functions.{CountIn, FilterIn, TermFreqs, TokensWs}
 
 /** The r17 native tokenization kernels must be VALUE-IDENTICAL to the
   * builtin forms they replaced — on the fixture documents and on
   * adversarial edge rows (null text, empty string, runs of spaces,
   * multi-byte UTF-8, tab/newline NON-separators). The builtin chains
-  * are re-stated here verbatim (TextOps now routes through the
-  * kernels, so the references must not call TextOps). */
+  * are restated in [[KernelRefs]]; the kernels are built straight from
+  * their constructors. */
 class TokenKernelsSpec extends SparkSpec {
-
-  private def refTokens(text: org.apache.spark.sql.Column) =
-    filter(split(text, " "), t => t =!= lit(""))
+  import KernelRefs.{tokens => refTokens}
 
   private def edgeDf = {
     val schema = StructType(Seq(
@@ -35,10 +35,9 @@ class TokenKernelsSpec extends SparkSpec {
     graft.sources.Tables.documents(spark, sf).select(col("doc_id").as("id"), col("text"))
 
   test("tokens_ws matches filter(split(text,' '), _ <> '') on fixture + edges") {
-    graft.functions.TokenKernels.register(spark)
     for (df <- Seq(fixtureDocs, edgeDf)) {
       val cmp = df.select(
-          call_function("tokens_ws", col("text")).as("k"),
+          toColumn(TokensWs(toExpr(col("text")))).as("k"),
           refTokens(col("text")).as("r"))
         .where(!(col("k") <=> col("r")))
       assert(cmp.count() === 0)
@@ -46,7 +45,6 @@ class TokenKernelsSpec extends SparkSpec {
   }
 
   test("term_freqs matches per-term size(filter(toks, = t)) counts") {
-    graft.functions.TokenKernels.register(spark)
     val terms = Seq("the", "join", "多字节", "absent_term")
     for (df <- Seq(fixtureDocs, edgeDf)) {
       // non-null text only: on a null array the kernel yields null while
@@ -54,29 +52,26 @@ class TokenKernelsSpec extends SparkSpec {
       // call site filters text IS NOT NULL before tokenizing, so only
       // the null→null contract matters (asserted below)
       val t = refTokens(col("text"))
-      val tfc = call_function("term_freqs", t, array(terms.map(lit): _*))
-      val refs = terms.map(q => size(filter(t, tok => tok === q)).cast("long"))
       val cmp = df.where(col("text").isNotNull).select(
-          tfc.as("k"),
-          array(refs: _*).as("r"))
+          toColumn(TermFreqs(toExpr(t), terms)).as("k"),
+          KernelRefs.termFreqs(t, terms).as("r"))
         .where(!(col("k") <=> col("r")))
       assert(cmp.count() === 0)
     }
     assert(edgeDf.where(col("text").isNull)
-      .select(call_function("term_freqs", refTokens(col("text")), array(terms.map(lit): _*)))
+      .select(toColumn(TermFreqs(toExpr(refTokens(col("text"))), terms)))
       .collect().forall(_.isNullAt(0)))
   }
 
   test("count_in / filter_in match the isin filter forms") {
-    graft.functions.TokenKernels.register(spark)
     val words = Seq("the", "a", "of", "と")
     for (df <- Seq(fixtureDocs, edgeDf)) {
       val t = refTokens(col("text"))
       val cmp = df.select(
-          call_function("count_in", t, array(words.map(lit): _*)).as("kc"),
-          size(filter(t, x => x.isin(words.map(w => w: Any): _*))).as("rc"),
-          call_function("filter_in", t, array(words.map(lit): _*)).as("kf"),
-          filter(t, x => x.isin(words.map(w => w: Any): _*)).as("rf"))
+          toColumn(CountIn(toExpr(t), words)).as("kc"),
+          KernelRefs.countIn(t, words).as("rc"),
+          toColumn(FilterIn(toExpr(t), words)).as("kf"),
+          KernelRefs.filterIn(t, words).as("rf"))
         .where(!(col("kc") <=> col("rc")) || !(col("kf") <=> col("rf")))
       assert(cmp.count() === 0)
     }
